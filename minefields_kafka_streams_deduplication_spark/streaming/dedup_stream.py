@@ -16,9 +16,10 @@ from __future__ import annotations
 
 from typing import Any, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -55,54 +56,95 @@ def dedup_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_parquet(stream, "dedup_stream_watermark", partitions=stream_partitions(spark, sf_dir))
 
 
-DEDUP_TTL_STATE_SCHEMA = "last_kept_us LONG"
+# D5 state is grouped by a hash bucket of the TTL key, not by the key:
+# every Python state group costs a fixed Arrow slice, pandas conversion
+# and state (de)serialization (about 3 ms), so with one group per key
+# that framework overhead, not the fold, would be the operator's cost.
+# The bucket count is frozen into the checkpoint at first run (it is the
+# grouping key), like STREAM_SHUFFLE_PARTITIONS.
+TTL_STATE_BUCKETS = 64
+# One state row per bucket: parallel arrays forming the bucket's
+# (user_id, event_type) -> last forwarded ts_us map.
+DEDUP_TTL_STATE_SCHEMA = (
+    "user_id ARRAY<LONG>, event_type ARRAY<STRING>, last_kept_us ARRAY<LONG>"
+)
 DEDUP_TTL_OUTPUT_SCHEMA = (
     "event_id LONG, ts_us LONG, user_id LONG, event_type STRING, value DOUBLE"
 )
+_TTL_COLS = ["event_id", "ts_us", "user_id", "event_type", "value"]
+
+
+def ttl_bucket() -> Column:
+    """The D5 state group of a TTL key: pmod(xxhash64(key), TTL_STATE_BUCKETS)."""
+    return F.pmod(F.xxhash64(*TTL_KEY), F.lit(TTL_STATE_BUCKETS))
+
+
+def ttl_fold(pdf: pd.DataFrame, last: dict) -> np.ndarray:
+    """The D5 fold kernel, shared by both arbitrary-state APIs.
+
+    Reference transformer semantics [R]: in (ts_us, event_id) order,
+    forward a record iff no record of the same (user_id, event_type)
+    key was FORWARDED within the TTL; only a forwarded record updates
+    the key's entry in ``last`` (put-only-on-forward), in place. ``pdf``
+    is the whole group, all Arrow chunks concatenated: the chunks come
+    in input order, so sorting them one at a time would fold them in
+    the wrong order. Returns the forwarded rows' positions in ``pdf``.
+    """
+    ttl_us = TTL_MINUTES * 60 * 1_000_000
+    ts_us = pdf["ts_us"].to_numpy()
+    order = np.lexsort((pdf["event_id"].to_numpy(), ts_us))
+    keys = zip(
+        pdf["user_id"].to_numpy()[order].tolist(),
+        pdf["event_type"].to_numpy()[order].tolist(),
+    )
+    keep = []
+    for pos, key, ts in zip(order.tolist(), keys, ts_us[order].tolist()):
+        prev = last.get(key)
+        if prev is None or ts - prev > ttl_us:
+            keep.append(pos)
+            last[key] = ts
+    return np.asarray(keep, dtype=np.int64)
 
 
 def _dedup_ttl_fn(
     key: tuple[Any, ...], pdfs: Iterable[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    """Reference transformer semantics [R]: forward a record iff no
-    record of the same key was FORWARDED within the TTL; record the
-    forwarded timestamp (put-only-on-forward)."""
-    ttl_us = TTL_MINUTES * 60 * 1_000_000
-    (last_kept_us,) = state.get if state.exists else (None,)
-    cols = ["event_id", "ts_us", "user_id", "event_type", "value"]
-    out = []
-    for pdf in pdfs:
-        pdf = pdf[cols].sort_values(["ts_us", "event_id"])
-        for row in pdf.itertuples(index=False):
-            if last_kept_us is None or row.ts_us - last_kept_us > ttl_us:
-                out.append(row)
-                last_kept_us = row.ts_us
-    state.update((last_kept_us,))
-    if out:
-        yield pd.DataFrame(out, columns=cols)
+    """Fold one bucket's micro-batch through `ttl_fold`, with the
+    bucket's key -> last-forwarded map as its state row."""
+    pdf = pd.concat(list(pdfs), ignore_index=True)
+    users, types, lasts = state.get if state.exists else ([], [], [])
+    last = dict(zip(zip(users, types), lasts))
+    keep = ttl_fold(pdf, last)
+    # A record is dropped only against an existing entry, so a bucket
+    # that forwarded nothing has an unchanged map: skip the rewrite.
+    if len(keep):
+        state.update(
+            ([k[0] for k in last], [k[1] for k in last], list(last.values()))
+        )
+        yield pdf[_TTL_COLS].take(keep)
 
 
-@query("dedup_stream_custom_ttl")  # rows-only: arbitrary-state streaming op
-def dedup_stream_custom_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D5: custom-TTL dedup via arbitrary stateful processing — the
-    faithful port of the reference's Processor-API dedup transformer
-    (value state = last forwarded event-time per key).
-
-    Arrow-batched per key-group (`applyInPandasWithState`), so the
-    Python hop is vectorized; at 100 TB this op shuffles once on the
-    dedup key and state size is one long per live key.
-    """
-    stream = read_events_stream(spark, sf_dir).select(
+def _ttl_input(events: DataFrame) -> DataFrame:
+    """The D5 operators' input: the fold's columns plus the event-time
+    column the watermark is declared on."""
+    return events.select(
         "event_id",
         F.unix_micros("ts").alias("ts_us"),
         "user_id",
         "event_type",
         "value",
         F.col("ts"),
-    )
-    deduped = (
-        stream.withWatermark("ts", WATERMARK_DELAY)
-        .groupBy(*TTL_KEY)
+    ).withWatermark("ts", WATERMARK_DELAY)
+
+
+def ttl_dedup_stream(events: DataFrame) -> DataFrame:
+    """D5's streaming plan over a stream of events rows (event_id, ts,
+    user_id, event_type, value): one shuffle on the TTL bucket, then
+    `_dedup_ttl_fn` per bucket, without timeouts (no state eviction)."""
+    return (
+        _ttl_input(events)
+        .withColumn("ttl_bucket", ttl_bucket())
+        .groupBy("ttl_bucket")
         .applyInPandasWithState(
             _dedup_ttl_fn,
             outputStructType=DEDUP_TTL_OUTPUT_SCHEMA,
@@ -111,6 +153,24 @@ def dedup_stream_custom_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
+
+
+@query("dedup_stream_custom_ttl")  # rows-only: arbitrary-state streaming op
+def dedup_stream_custom_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """D5: custom-TTL dedup via arbitrary stateful processing — the
+    faithful port of the reference's Processor-API dedup transformer
+    (value state = last forwarded event-time per key).
+
+    State is grouped by key bucket (`applyInPandasWithState` over
+    `pmod(xxhash64(user_id, event_type), TTL_STATE_BUCKETS)`), so one
+    Python call folds every key of a bucket in a single ts-ordered pass
+    (`ttl_fold`). The op shuffles once, on the bucket. Each bucket's
+    state row maps its keys to their last forwarded timestamp: about
+    keys / 64 entries, rewritten once per micro-batch for every bucket
+    that forwarded a record. Checkpoints written with the earlier
+    per-key state layout (one `last_kept_us` per key) cannot be resumed.
+    """
+    deduped = ttl_dedup_stream(read_events_stream(spark, sf_dir))
     # Python-state ops are worker-CPU-bound: give them a worker per core
     # (unlike JVM state ops, where fewer stores win at fixture scale).
     n_part = spark.sparkContext.defaultParallelism
@@ -165,7 +225,6 @@ def dedup_stream_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
     from pyspark.sql.types import LongType, StructField, StructType
 
-    ttl_us = TTL_MINUTES * 60 * 1_000_000
     state_schema = StructType([StructField("last_kept_us", LongType())])
 
     class TTLDedupProcessor(StatefulProcessor):
@@ -173,33 +232,19 @@ def dedup_stream_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             self._state = handle.getValueState("lastKept", state_schema)
 
         def handleInputRows(self, key, rows, timerValues):
-            last = self._state.get()[0] if self._state.exists() else None
-            cols = ["event_id", "ts_us", "user_id", "event_type", "value"]
-            out = []
-            for pdf in rows:
-                pdf = pdf[cols].sort_values(["ts_us", "event_id"])
-                for row in pdf.itertuples(index=False):
-                    if last is None or row.ts_us - last > ttl_us:
-                        out.append(row)
-                        last = row.ts_us
-            if last is not None:
-                self._state.update((last,))
-            if out:
-                yield pd.DataFrame(out, columns=cols)
+            last = {tuple(key): self._state.get()[0]} if self._state.exists() else {}
+            pdf = pd.concat(list(rows), ignore_index=True)
+            keep = ttl_fold(pdf, last)
+            if len(keep):
+                (kept_us,) = last.values()
+                self._state.update((kept_us,))
+                yield pdf[_TTL_COLS].take(keep)
 
         def close(self) -> None:
             pass
 
-    stream = read_events_stream(spark, sf_dir).select(
-        "event_id",
-        F.unix_micros("ts").alias("ts_us"),
-        "user_id",
-        "event_type",
-        "value",
-        F.col("ts"),
-    )
     deduped = (
-        stream.withWatermark("ts", WATERMARK_DELAY)
+        _ttl_input(read_events_stream(spark, sf_dir))
         .groupBy(*TTL_KEY)
         .transformWithStateInPandas(
             TTLDedupProcessor(),

@@ -194,18 +194,22 @@ def test_foreach_batch_partitioned_upsert(spark):
 
 
 def test_custom_ttl_state_survives_restart(spark):
-    """D5 recovery: the applyInPandasWithState TTL dedup's per-key state
-    (last forwarded timestamp) must be RESTORED on restart — a repeat
+    """D5 recovery on the production plan: each bucket's key -> last
+    forwarded timestamp map must be RESTORED on restart — a repeat
     inside the TTL that arrives in the second run is suppressed only if
-    the first run's state came back from the checkpoint."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
+    the first run's state came back from the checkpoint. A second key in
+    the SAME state bucket must keep its own entry across the restart."""
     from minefields_kafka_streams_deduplication_spark.streaming.dedup_stream import (
-        DEDUP_TTL_OUTPUT_SCHEMA,
-        DEDUP_TTL_STATE_SCHEMA,
-        TTL_KEY,
-        _dedup_ttl_fn,
+        ttl_bucket,
+        ttl_dedup_stream,
     )
+
+    # The first user id whose (user_id, 'a') key shares (7, 'a')'s bucket.
+    keys = spark.range(7, 10_000).selectExpr("id AS user_id", "'a' AS event_type")
+    buckets = keys.select("user_id", ttl_bucket().alias("b"))
+    b7 = buckets.where("user_id = 7").first().b
+    u2 = buckets.where(f"user_id > 7 AND b = {b7}").agg(F.min("user_id")).first()[0]
+    assert u2 is not None
 
     schema = "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE"
     src = tempfile.mkdtemp(prefix="ttlrec_src_")
@@ -219,26 +223,8 @@ def test_custom_ttl_state_survives_restart(spark):
         )
 
     def run():
-        stream = (
-            spark.readStream.schema(schema)
-            .parquet(os.path.join(src, "*.parquet"))
-            .select(
-                "event_id",
-                F.unix_micros("ts").alias("ts_us"),
-                "user_id",
-                "event_type",
-                "value",
-                F.col("ts"),
-            )
-            .withWatermark("ts", "10 minutes")
-            .groupBy(*TTL_KEY)
-            .applyInPandasWithState(
-                _dedup_ttl_fn,
-                outputStructType=DEDUP_TTL_OUTPUT_SCHEMA,
-                stateStructType=DEDUP_TTL_STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
+        stream = ttl_dedup_stream(
+            spark.readStream.schema(schema).parquet(os.path.join(src, "*.parquet"))
         )
         q = (
             stream.writeStream.format("parquet")
@@ -251,14 +237,28 @@ def test_custom_ttl_state_survives_restart(spark):
         q.awaitTermination()
         return sorted(r.event_id for r in spark.read.parquet(out).collect())
 
-    # Run 1: keeper at t0, repeat at +5 min (suppressed, TTL 30 min).
-    write("b0.parquet", [(1, m(0), 7, "a", 1.0), (2, m(5), 7, "a", 1.0)])
-    assert run() == [1]
+    # Run 1, TTL 30 min: key A = (7, 'a') keeps t0 and suppresses +5 min;
+    # key B = (u2, 'a') keeps +10 min (a bucket-wide state would drop it).
+    write(
+        "b0.parquet",
+        [(1, m(0), 7, "a", 1.0), (2, m(5), 7, "a", 1.0), (11, m(10), u2, "a", 1.0)],
+    )
+    assert run() == [1, 11]
 
-    # Run 2 (restart): +20 min repeat is inside the RESTORED TTL state
-    # and must stay suppressed; +45 min is past the TTL and forwards.
-    write("b1.parquet", [(3, m(20), 7, "a", 1.0), (4, m(45), 7, "a", 1.0)])
-    assert run() == [1, 4], "state not restored: the +20min repeat leaked"
+    # Run 2 (restart): A's +20 min repeat is inside the RESTORED TTL and
+    # stays suppressed, +32 min forwards. B's +38 min repeat is inside
+    # B's own restored TTL (from +10) — it would leak against A's — and
+    # +41 min forwards.
+    write(
+        "b1.parquet",
+        [
+            (3, m(20), 7, "a", 1.0),
+            (4, m(32), 7, "a", 1.0),
+            (12, m(38), u2, "a", 1.0),
+            (13, m(41), u2, "a", 1.0),
+        ],
+    )
+    assert run() == [1, 4, 11, 13], "bucket state not restored per key"
 
 
 def test_anomaly_welford_state_survives_restart(spark):

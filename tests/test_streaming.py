@@ -3,6 +3,8 @@ the D4/D5 state behaviors, on the sf0.001 fixture."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 import minefields_kafka_streams_deduplication_spark as engine
@@ -478,6 +480,38 @@ def test_stream_zscore_multichunk_arrow_batches(spark, sf_dir):
                 want[r.event_id] = (math.floor(z * 10000 + 0.5) / 10000, n)
         state[r.user_id] = welford_step(n, mean, m2, r.value)
     assert got == want
+
+
+def test_stream_custom_ttl_multichunk_arrow_batches(spark, sf_dir, tmp_path):
+    """The TTL dedup's state groups arrive as several Arrow chunks once
+    they exceed arrow.maxRecordsPerBatch, in input order. Replay the
+    fixture's events in a shuffled file order with 2-row chunks: the
+    stream must forward exactly the batch twin's ids. Folding each
+    chunk on its own (the per-chunk sort) forwards out-of-order rows
+    that an earlier-timestamped row in a later chunk should suppress."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    events = pq.read_table(f"{sf_dir}/events.parquet")
+    perm = np.random.default_rng(7).permutation(events.num_rows)
+    shuffled = str(tmp_path / "sf")
+    os.makedirs(shuffled)
+    pq.write_table(events.take(perm), f"{shuffled}/events.parquet")
+
+    qs = engine.get_queries()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        stream_ids = sorted(
+            r.event_id for r in qs["dedup_stream_custom_ttl"](spark, shuffled).collect()
+        )
+    finally:
+        spark.conf.set(key, prev)
+    batch_ids = sorted(
+        r.event_id for r in qs["dedup_batch_custom_ttl"](spark, shuffled).collect()
+    )
+    assert stream_ids == batch_ids
 
 
 def test_wall_clock_punctuator_semantics(spark, tmp_path):

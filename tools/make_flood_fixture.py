@@ -29,10 +29,12 @@ def main() -> None:
     con.execute(
         f"CREATE VIEW t AS SELECT * FROM read_parquet('{src}/documents.parquet')"
     )
+    # Replica r's ids sit in their own block past the source's largest id.
+    stride = con.execute("SELECT max(doc_id) + 1 FROM t").fetchone()[0]
     con.execute(
         f"""
 COPY (
-  SELECT doc_id + r * 10000 AS doc_id,
+  SELECT doc_id + r * {stride} AS doc_id,
          text || ' xqzreplica' || r AS text,
          lang, source, n_chars + 12 AS n_chars
   FROM t, range({reps}) s(r)
