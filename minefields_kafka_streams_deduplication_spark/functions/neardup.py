@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
+from .collapse import by_text_class, expand_rep_pairs, winner
 
 JACCARD_THRESHOLD = 0.8
 MINHASH_PERMS = 64
@@ -103,32 +104,23 @@ FROM (SELECT doc_id, string_split(lower(text), ' ') AS tokens FROM documents) sr
 
 
 def _collapsed_rep_jaccard(docs: DataFrame):
-    """THE one implementation of the exact-copy collapse + inverted-
-    index Jaccard core (review r4 rule: one implementation so a change
-    to the shingle grammar or the Jaccard arithmetic cannot silently
-    fork the pipelines — extended in r11 to the rep-collapsed family).
-    Returns ``(members, counts, rep_pairs)``:
+    """THE one implementation of the inverted-index Jaccard core over
+    the exact-copy collapse (review r4 rule: one implementation so a
+    change to the shingle grammar or the Jaccard arithmetic cannot
+    silently fork the pipelines — extended in r11 to the rep-collapsed
+    family). Returns ``(members, counts, rep_pairs)``:
 
     - ``members`` (doc_id, rep_id): every doc mapped to its distinct-
-      text representative (min doc_id over the md5(text) group) —
-      CACHED, both consumers expand through it;
+      text representative (min doc_id over the md5(text) class,
+      :func:`by_text_class`) — CACHED, every consumer expands through it;
     - ``counts`` (doc_id, n): distinct-shingle count per rep — a rep
       absent here has <3 tokens and joins nothing in the inverted
-      index (the reference-formulation corner both consumers honor);
+      index (the reference-formulation corner all consumers honor);
     - ``rep_pairs`` (rep_1 < rep_2, n_common, jac DOUBLE, un-rounded,
-      un-thresholded): every rep pair sharing ≥1 shingle.
-
-    The window-form collapse (r6): ONE exchange on the text hash
-    serves member map and rep filter through ReuseExchange."""
-    from pyspark.sql import Window
-
-    flagged = docs.select("doc_id", "text").withColumn(
-        "rep_id", F.min("doc_id").over(Window.partitionBy(F.md5("text")))
-    )
-    members = flagged.select("doc_id", "rep_id").cache()
-    reps = flagged.filter(F.col("doc_id") == F.col("rep_id")).select(
-        "doc_id", "text"
-    )
+      un-thresholded): every rep pair sharing ≥1 shingle."""
+    classes = by_text_class(docs, F.col("text"), *winner("text"))
+    members = classes.members.cache()
+    reps = classes.reps.select("doc_id", "text")
     sh = _shingles(reps).cache()
     counts = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     a = sh.select(F.col("doc_id").alias("rep_1"), "shingle")
@@ -189,33 +181,7 @@ def dedup_text_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     rep_pairs = raw_pairs.filter(F.col("jac") >= JACCARD_THRESHOLD).select(
         "rep_1", "rep_2", F.round(F.col("jac"), 4).alias("jaccard")
     )
-    # Expand cross-group pairs: every (member of rep_1) × (member of rep_2).
-    m1 = members.select(F.col("rep_id").alias("rep_1"), F.col("doc_id").alias("d1"))
-    m2 = members.select(F.col("rep_id").alias("rep_2"), F.col("doc_id").alias("d2"))
-    cross = rep_pairs.join(m1, "rep_1").join(m2, "rep_2").select(
-        F.least("d1", "d2").alias("doc_id_1"),
-        F.greatest("d1", "d2").alias("doc_id_2"),
-        "jaccard",
-    )
-    # Within-group pairs: exact copies, jaccard 1.0 by construction.
-    # Restricted to groups whose representative HAS shingles — a doc
-    # with <3 tokens joins nothing in the inverted index, so the
-    # reference formulation emits no pair for its copies either.
-    shingled_reps = counts.select(F.col("doc_id").alias("rep_id"))
-    g1 = members.join(shingled_reps, "rep_id").select(
-        "rep_id", F.col("doc_id").alias("d1")
-    )
-    g2 = members.select("rep_id", F.col("doc_id").alias("d2"))
-    within = (
-        g1.join(g2, "rep_id")
-        .filter(F.col("d1") < F.col("d2"))
-        .select(
-            F.col("d1").alias("doc_id_1"),
-            F.col("d2").alias("doc_id_2"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    return cross.unionByName(within)
+    return expand_rep_pairs(rep_pairs, members, counts, "jaccard", F.lit(1.0))
 
 
 import functools
@@ -515,33 +481,6 @@ def exact_jaccard_for_pairs(
     )
 
 
-def _winner_collapse(docs: DataFrame, payload: tuple[str, ...], norm=None):
-    """THE single-aggregate exact-copy collapse (r12 dedup_text_minhash
-    form, factored out in r13 so the ORACLE-backed witness runs the
-    same code path — VERDICT r12 #5): one ``groupBy(md5(norm))``
-    aggregate produces the winner row per distinct text
-    (``min(doc_id)`` + ``min_by(payload, doc_id)``), partial-aggregated
-    map-side so the exchange carries at most one winner candidate per
-    distinct text per map task — the old winner-id groupBy + left_semi
-    re-scan paid a hash exchange AND a second corpus pass; the window
-    form ships EVERY copy's text through the exchange.
-
-    Returns ``(nh_docs, winners)``: ``nh_docs`` is ``docs`` plus the
-    ``nh`` text-hash column (callers needing a member→rep map join its
-    narrow (doc_id, nh) projection back to ``winners`` on nh — the
-    winners side is already hash-partitioned by nh coming out of the
-    aggregate, so only the narrow side shuffles); ``winners`` is one row
-    per distinct text with ``doc_id`` = min doc id of the copy group and
-    the ``payload`` columns from that winner row (min_by over the unique
-    doc_id key is deterministic)."""
-    nh_docs = docs.withColumn("nh", F.md5(norm if norm is not None else F.col("text")))
-    winners = nh_docs.groupBy("nh").agg(
-        F.min("doc_id").alias("doc_id"),
-        *[F.min_by(c, "doc_id").alias(c) for c in payload],
-    )
-    return nh_docs, winners
-
-
 @query("dedup_text_minhash")  # rows-only: xxhash64 values are engine-specific
 def dedup_text_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH near-dup dedup: MINHASH_PERMS minhashes per doc
@@ -577,11 +516,9 @@ def dedup_text_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final survivor set is unchanged. min_by(col, doc_id) reproduces
     # exactly the winner ROW the old semi-join form kept (doc_id is
     # unique, so min_by is deterministic).
-    _, winners = _winner_collapse(
-        all_docs,
-        payload=("lang", "source", "text"),
-        norm=F.lower(F.trim(F.col("text"))),
-    )
+    winners = by_text_class(
+        all_docs, F.lower(F.trim(F.col("text"))), *winner("lang", "source", "text")
+    ).reps
     # (doc_id, lang, source, hs) — the ONE cached frame: signature,
     # verify-set and final-projection consumers all read it (uncached,
     # each would re-run the collapse aggregate). Shingle-hash LONGS,
@@ -658,31 +595,21 @@ def neardup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic-complete in practice (miss probability ~4e-10 per
     true pair; the strict gate checks it end-to-end at two SFs).
 
-    Same exact-copy collapse as :func:`dedup_text_minhash` (THE shared
-    `_winner_collapse` single-aggregate form, r13) with group
-    re-expansion: LSH runs on one representative per distinct text
-    (hot-band quadratic blowup from copies is gone), member pairs are
-    expanded back afterwards — identical output.
+    Same exact-copy collapse as :func:`dedup_text_minhash` (the shared
+    :func:`by_text_class` aggregate) with group re-expansion
+    (:func:`expand_rep_pairs`): LSH runs on one representative per
+    distinct text (hot-band quadratic blowup from copies is gone),
+    member pairs are expanded back afterwards — identical output.
     """
     docs = load_table(spark, sf_dir, "documents")
-    # Exact-copy collapse via THE shared single-aggregate winner form
-    # (`_winner_collapse` — r13, VERDICT r12 #5): the witness now runs
-    # the SAME collapse code path as the rows-only dedup_text_minhash,
-    # so this query's oracle row pins the full r12 kernel family
-    # (single-aggregate collapse + array signatures + sets= verify).
-    # The aggregate partial-aggregates map-side (≤ one winner-candidate
-    # text per distinct text per map task crosses the exchange), where
-    # the previous window form shipped EVERY copy's text; the member→rep
-    # map costs one extra narrow (doc_id, nh) exchange — the winners
-    # side reuses the aggregate's hash partitioning on nh.
-    nh_docs, winners = _winner_collapse(docs.select("doc_id", "text"), payload=("text",))
-    reps = winners.select("doc_id", "text")
-    members = (
-        nh_docs.select("doc_id", "nh")
-        .join(winners.select("nh", F.col("doc_id").alias("rep_id")), "nh")
-        .select("doc_id", "rep_id")
-        .cache()
-    )
+    # The witness runs the SAME collapse as the rows-only
+    # dedup_text_minhash, so this query's oracle row pins the full r12
+    # kernel family (aggregate collapse + array signatures + sets=
+    # verify). The member→rep map costs one extra narrow (doc_id, th)
+    # exchange.
+    classes = by_text_class(docs, F.col("text"), *winner("text"))
+    reps = classes.reps.select("doc_id", "text")
+    members = classes.members.cache()
 
     # Per-rep shingle STRING array (r12, the dedup_text_minhash array
     # rework applied to the witness): signatures fold per ROW from
@@ -726,36 +653,11 @@ def neardup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("rep_1", "rep_2", F.round("jaccard", 4).alias("jaccard"))
     )
 
-    # Expand cross-group pairs: every (member of rep_1) × (member of rep_2).
-    m1 = members.select(F.col("rep_id").alias("rep_1"), F.col("doc_id").alias("d1"))
-    m2 = members.select(F.col("rep_id").alias("rep_2"), F.col("doc_id").alias("d2"))
-    cross = rep_pairs.join(m1, "rep_1").join(m2, "rep_2").select(
-        F.least("d1", "d2").alias("doc_id_1"),
-        F.greatest("d1", "d2").alias("doc_id_2"),
-        "jaccard",
+    # Within-group pairs are independent of the LSH candidate set (a
+    # multi-member group needs no collision to be a true pair set).
+    return expand_rep_pairs(
+        rep_pairs, members, sarr.where(F.size("sh") > 0), "jaccard", F.lit(1.0)
     )
-    # Within-group pairs: exact copies, Jaccard 1.0 by construction —
-    # independent of the LSH candidate set (a multi-member group needs
-    # no collision to be a true pair set). Gated on the rep actually
-    # having shingles (<3 tokens ⇒ no shingles ⇒ no oracle pair) —
-    # read off the cached shingle-array frame.
-    shingled_reps = sarr.where(F.size("sh") > 0).select(
-        F.col("doc_id").alias("rep_id")
-    )
-    g1 = members.join(shingled_reps, "rep_id").select(
-        "rep_id", F.col("doc_id").alias("d1")
-    )
-    g2 = members.select("rep_id", F.col("doc_id").alias("d2"))
-    within = (
-        g1.join(g2, "rep_id")
-        .filter(F.col("d1") < F.col("d2"))
-        .select(
-            F.col("d1").alias("doc_id_1"),
-            F.col("d2").alias("doc_id_2"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    return cross.unionByName(within)
 
 
 CC_MAX_ITERS = 20
@@ -950,15 +852,9 @@ def dedup_text_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     import operator
 
     docs = load_table(spark, sf_dir, "documents")
-    nh_docs, winners = _winner_collapse(docs.select("doc_id", "text"), payload=("text",))
-    reps = winners.select("doc_id", "text")
-    members = (
-        nh_docs.select("doc_id", "nh")
-        .join(winners.select("nh", F.col("doc_id").alias("rep_id")), "nh")
-        .select("doc_id", "rep_id")
-        .cache()
-    )
-    sh = _shingles(reps)
+    classes = by_text_class(docs, F.col("text"), *winner("text"))
+    members = classes.members.cache()
+    sh = _shingles(classes.reps.select("doc_id", "text"))
     hashed = sh.select(
         "doc_id",
         F.conv(F.substring(F.md5("shingle"), 1, 8), 16, 10)
@@ -1019,35 +915,12 @@ def dedup_text_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .select("rep_1", "rep_2", "hamming")
     )
-    # Expand cross-group pairs (the dedup_text_ngram_jaccard pattern):
-    # copies share their rep's fingerprint, so a member pair's hamming
-    # IS its reps' hamming.
-    m1 = members.select(F.col("rep_id").alias("rep_1"), F.col("doc_id").alias("d1"))
-    m2 = members.select(F.col("rep_id").alias("rep_2"), F.col("doc_id").alias("d2"))
-    cross = rep_pairs.join(m1, "rep_1").join(m2, "rep_2").select(
-        F.least("d1", "d2").alias("doc_id_1"),
-        F.greatest("d1", "d2").alias("doc_id_2"),
-        "hamming",
+    # Copies share their rep's fingerprint, so a member pair's hamming
+    # IS its reps' hamming; a rep without a fingerprint (<3 tokens) has
+    # no within-group pairs.
+    return expand_rep_pairs(
+        rep_pairs, members, fps, "hamming", F.lit(0).cast("int")
     )
-    # Within-group pairs: exact copies → hamming 0 by construction —
-    # gated on the rep actually HAVING a fingerprint (<3 tokens ⇒ no
-    # shingles ⇒ no fingerprint ⇒ the uncollapsed form emitted no pair
-    # for its copies either).
-    fp_reps = fps.select(F.col("doc_id").alias("rep_id"))
-    g1 = members.join(fp_reps, "rep_id").select(
-        "rep_id", F.col("doc_id").alias("d1")
-    )
-    g2 = members.select("rep_id", F.col("doc_id").alias("d2"))
-    within = (
-        g1.join(g2, "rep_id")
-        .filter(F.col("d1") < F.col("d2"))
-        .select(
-            F.col("d1").alias("doc_id_1"),
-            F.col("d2").alias("doc_id_2"),
-            F.lit(0).cast("int").alias("hamming"),
-        )
-    )
-    return cross.unionByName(within)
 
 
 BENCHMARK_DOC_CUTOFF = 20  # doc_id < 20 stands in for the held-out eval set
@@ -2047,13 +1920,9 @@ def doc_novelty_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import round4f
 
     docs = load_table(spark, sf_dir, "documents")
-    nh_docs, winners = _winner_collapse(
-        docs.select("doc_id", "text"), payload=("text",), norm=F.lower(F.col("text"))
-    )
-    members = nh_docs.select("doc_id", "nh").join(
-        winners.select("nh", F.col("doc_id").alias("rep_id")), "nh"
-    )
-    sh = _shingles(winners.select("doc_id", "text")).cache()
+    classes = by_text_class(docs, F.lower(F.col("text")), *winner("text"))
+    members = classes.members
+    sh = _shingles(classes.reps.select("doc_id", "text")).cache()
     firsts = sh.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
     novel = F.sum(
         F.when(F.col("first_doc") == F.col("doc_id"), 1).otherwise(0)

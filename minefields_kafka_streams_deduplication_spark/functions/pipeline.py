@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, round4f
 from ..operators.analytic import _global_row_number
 from ..registry import query
+from .collapse import by_text_class, copy_weight, rep_tokens
 
 # ---------------------------------------------------------------------------
 # Corpus / table profiling — the "describe" pass a pipeline runs first.
@@ -424,7 +425,6 @@ def importance_weight_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~5x (r8 probe: 33.5 → 11.7 s at 1000× on the copy-flood fixture;
     # the residual cost is the per-copy doc_id hash join — inherent to
     # a per-doc output).
-    doc_map = docs.select("doc_id", F.md5(F.lower("text")).alias("th"))
     # ONE corpus aggregate carries both copy weights (r12, guide §2.3/
     # §2.4): total copies `w` AND target-lang copies `wl` fold in the
     # same groupBy — the previous separate lang-filtered aggregate was
@@ -433,12 +433,14 @@ def importance_weight_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     # first aggregate could carry for free. Values unchanged:
     # sum(when(lang=target,1)) per th == the old lang-filtered count,
     # with absent groups 0 == the old coalesce(wl, 0).
-    reps = docs.groupBy(F.md5(F.lower("text")).alias("th")).agg(
-        F.count(F.lit(1)).alias("w"),
+    doc_map, reps = by_text_class(
+        docs,
+        F.lower("text"),
+        copy_weight(),
         F.sum(
             F.when(F.col("lang") == DSIR_TARGET_LANG, F.lit(1)).otherwise(F.lit(0))
         ).alias("wl"),
-        F.first(F.split(F.lower("text"), " ")).alias("tk"),
+        rep_tokens(),
     )
     # (th, token, c): pinned — feeds the LM counts AND the score join.
     # r13 audit note (measured and REJECTED, the doc_char_entropy
@@ -625,11 +627,7 @@ def doc_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scores the DISTINCT-text table and corpus counts weight each
     # representative by its copy count — identical model, identical
     # scores, and the copy-flood no longer pays the explode per copy.
-    doc_map = docs.select("doc_id", F.md5(F.lower("text")).alias("th"))
-    reps = docs.groupBy(F.md5(F.lower("text")).alias("th")).agg(
-        F.count(F.lit(1)).alias("w"),
-        F.first(F.split(F.lower("text"), " ")).alias("tk"),
-    )
+    doc_map, reps = by_text_class(docs, F.lower("text"), copy_weight(), rep_tokens())
     tok = reps.select("th", "w", F.explode("tk").alias("t"))
     # Pinned (r8 broadcast-reexecution sweep): doc_tf feeds the vocab
     # aggregate (whose totals ride as a broadcast) AND the per-rep
@@ -737,11 +735,7 @@ def doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shape the corpus statistics — collapse changes the execution,
     # never the model); doc ids re-attach by text hash at the end.
     # 10x exact-duplicate probe: 61.7 s -> distinct-text cost.
-    doc_map = docs.select("doc_id", F.md5(F.lower("text")).alias("th"))
-    reps = docs.groupBy(F.md5(F.lower("text")).alias("th")).agg(
-        F.count(F.lit(1)).alias("w"),
-        F.first(F.split(F.lower("text"), " ")).alias("tk"),
-    )
+    doc_map, reps = by_text_class(docs, F.lower("text"), copy_weight(), rep_tokens())
     n = F.size("tk")
     zipped = F.arrays_zip(
         F.slice("tk", 1, n - 1),

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, round4f
 from ..registry import query
+from .collapse import by_text_class, copy_weight, rep_tokens
 
 
 @query(
@@ -346,11 +347,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # terms re-attach per doc_id by text hash. th_tf is pinned: it
     # feeds the df aggregate (a broadcast subplan, which re-executes
     # its child) and the scoring join.
-    doc_map = docs.select("doc_id", F.md5(F.lower("text")).alias("th"))
-    reps = docs.groupBy(F.md5(F.lower("text")).alias("th")).agg(
-        F.count(F.lit(1)).alias("w"),
-        F.first(F.split(F.lower("text"), " ")).alias("tk"),
-    )
+    doc_map, reps = by_text_class(docs, F.lower("text"), copy_weight(), rep_tokens())
     th_tf = (
         reps.select("th", "w", F.explode("tk").alias("token"))
         .groupBy("th", "token")
@@ -598,11 +595,7 @@ def bm25_doc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Σw per text containing the term == countDistinct(doc_id)), and
     # scores re-attach by text hash. base is pinned: the scalar-stats
     # and score branches would each re-run the collapse otherwise.
-    doc_map = docs.select("doc_id", F.md5(F.lower("text")).alias("th"))
-    reps = docs.groupBy(F.md5(F.lower("text")).alias("th")).agg(
-        F.count(F.lit(1)).alias("w"),
-        F.first(F.split(F.lower("text"), " ")).alias("tk"),
-    )
+    doc_map, reps = by_text_class(docs, F.lower("text"), copy_weight(), rep_tokens())
     def tf_col(term: str) -> F.Column:
         # NOTE: the lambda must take exactly ONE parameter — pyspark
         # dispatches a two-parameter lambda to the (element, index)
@@ -1253,10 +1246,7 @@ def bigram_pmi_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     support floor prunes BEFORE the vocab joins; totals are 1-row
     broadcasts; the top-k plans TakeOrderedAndProject."""
     docs = load_table(spark, sf_dir, "documents")
-    reps = docs.groupBy(F.md5(F.lower("text")).alias("th")).agg(
-        F.count(F.lit(1)).alias("w"),
-        F.first(F.split(F.lower("text"), " ")).alias("tk"),
-    )
+    reps = by_text_class(docs, F.lower("text"), copy_weight(), rep_tokens()).reps
     n = F.size("tk")
     zipped = F.arrays_zip(
         F.slice("tk", 1, n - 1),

@@ -128,15 +128,6 @@ def peek_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tapped
 
 
-def split_streams(df: DataFrame, predicates: dict[str, "F.Column"]) -> dict[str, DataFrame]:
-    """P5 (multi-output form): KStream#split → named branches.
-
-    Returns one lazily-filtered DataFrame per branch; Catalyst merges the
-    shared scan, so materializing all branches costs one pass.
-    """
-    return {name: df.filter(pred) for name, pred in predicates.items()}
-
-
 @query(
     "merge_streams",
     oracle="""

@@ -45,7 +45,7 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 #            test suite pins their semantics directly).
 # Every oracle query has landed at least one green driver row (r1-r4:
 # 138/138); the builder's own strict gate additionally checks ALL
-# oracles at sf0.01 AND sf0.1 every round (tools/check_strict.py).
+# oracles at sf0.01 AND sf0.1 every round (tools/check.py).
 _R1_DRIVER_VERIFIED = frozenset(
     {
         "scan_events", "latest_by_key", "filter_purchases", "project_events",

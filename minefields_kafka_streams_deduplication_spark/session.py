@@ -53,6 +53,24 @@ def _cpus() -> int:
         return os.cpu_count() or 4
 
 
+def _driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``SPARK_DRIVER_MEMORY`` if set, else 30 % of the machine's
+    MemTotal clamped to 2–8 GiB (in MiB, a multiple of 256): a fixed
+    large default gets the local JVM OOM-killed on a small box."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    try:
+        with open(meminfo) as fh:
+            total_kib = next(
+                int(line.split()[1]) for line in fh if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError):
+        total_kib = 0
+    mib = min(max(int(total_kib * 0.3 / 1024), 2048), 8192)
+    return f"{mib // 256 * 256}m"
+
+
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an existing session (idempotent).
 
@@ -87,7 +105,7 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config(
             "spark.driver.extraJavaOptions",

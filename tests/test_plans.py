@@ -3,6 +3,7 @@ rely on at 100 TB must actually appear in the physical plan."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 import minefields_kafka_streams_deduplication_spark as engine
@@ -479,3 +480,80 @@ def test_grouped_quantile_queries_share_one_partitioning(spark, sf_dir):
         assert n_range == 0, (q, final[:2500])
         n_rdd = len(re.findall(r"Scan ExistingRDD", final))
         assert n_rdd >= 2, (q, f"branches must read the checkpointed frame, saw {n_rdd}")
+
+
+def _collapse_callers() -> list[str]:
+    """Registered queries whose body runs the text-class collapse
+    (functions/collapse.py directly, or the shared Jaccard core)."""
+    import inspect
+
+    return sorted(
+        name
+        for name, fn in engine.get_queries().items()
+        if any(
+            call in inspect.getsource(fn)
+            for call in ("by_text_class(", "_collapsed_rep_jaccard(")
+        )
+    )
+
+
+def _plan_nodes(node):
+    """Every physical node under ``node``, descending through AQE
+    wrappers and into cached relations' plans."""
+    yield node
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        yield from _plan_nodes(node.executedPlan())
+        return
+    if name == "InMemoryTableScan":
+        yield from _plan_nodes(node.relation().cachedPlan())
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def _is_text_class_aggregate(node) -> bool:
+    """An aggregate grouped on an ``md5(...)`` column projected below it."""
+    if not node.nodeName().endswith("Aggregate"):
+        return False
+    md5_ids = set()
+    for n in _plan_nodes(node):
+        if n.nodeName() != "Project":
+            continue
+        exprs = n.projectList()
+        for i in range(exprs.size()):
+            e = exprs.apply(i)
+            if (
+                e.getClass().getSimpleName() == "Alias"
+                and e.child().getClass().getSimpleName() == "Md5"
+            ):
+                md5_ids.add(e.exprId().id())
+    keys = node.groupingExpressions()
+    return any(keys.apply(i).exprId().id() in md5_ids for i in range(keys.size()))
+
+
+@pytest.mark.parametrize("name", _collapse_callers())
+def test_collapse_precedes_every_explode(spark, sf_dir, monkeypatch, name):
+    """Copy-flood safety by construction: in every query that runs the
+    exact-copy collapse, each ``Generate`` (explode) has an aggregate
+    keyed on the text-class hash (md5) in its subtree, i.e. token-volume
+    work runs once per distinct text, never once per copy. The plan tree
+    is walked node by node over py4j. Lazy ``localCheckpoint`` calls are
+    made transparent while the query is built, so the explodes they
+    materialize stay in the tree."""
+    cls = type(spark.range(1))
+    real = cls.localCheckpoint
+    monkeypatch.setattr(
+        cls,
+        "localCheckpoint",
+        lambda self, eager=True, **kw: real(self, eager, **kw) if eager else self,
+    )
+    root = engine.get_queries()[name](spark, sf_dir)._jdf.queryExecution().executedPlan()
+    nodes = list(_plan_nodes(root))
+    assert any(_is_text_class_aggregate(n) for n in nodes), f"{name}: no text-class aggregate"
+    for n in nodes:
+        if n.nodeName() == "Generate":
+            assert any(_is_text_class_aggregate(m) for m in _plan_nodes(n)), (
+                f"{name}: per-copy explode {n.toString()[:300]}"
+            )
+    spark.catalog.clearCache()

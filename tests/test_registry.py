@@ -68,3 +68,25 @@ def test_oracle_types_duckdb_hash_safe(sf_dir):
             if s in ("HUGEINT", "UHUGEINT", "UBIGINT") or s.startswith("DECIMAL"):
                 bad.append((name, col, s))
     assert not bad, f"hash-unsafe oracle column types: {bad}"
+
+
+def test_driver_memory_sized_from_machine(tmp_path, monkeypatch):
+    """Without SPARK_DRIVER_MEMORY the driver heap is 30 % of MemTotal,
+    clamped to 2–8 GiB and rounded down to 256 MiB; the env var wins."""
+    from minefields_kafka_streams_deduplication_spark.session import _driver_memory
+
+    def sized(total_gib):
+        path = tmp_path / f"meminfo_{total_gib}"
+        path.write_text(
+            f"MemTotal:       {int(total_gib * 1024 * 1024)} kB\n"
+            "MemFree:         1024 kB\n"
+        )
+        return _driver_memory(str(path))
+
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    assert sized(15) == "4608m"
+    assert sized(125) == "8192m"
+    assert sized(4) == "2048m"
+    assert _driver_memory(str(tmp_path / "missing")) == "2048m"
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert sized(15) == "3g"

@@ -14,7 +14,7 @@ from minefields_kafka_streams_deduplication_spark.functions.text import (
 
 
 def docs_df(spark, texts):
-    rows = [(i, t, "xx", "src0", len(t)) for i, t in enumerate(texts)]
+    rows = [(i, t, "xx", "src0", len(t) if t is not None else None) for i, t in enumerate(texts)]
     return spark.createDataFrame(rows, "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
 
 
@@ -62,11 +62,20 @@ def test_ngram_jaccard_detects_near_dupes(spark, monkeypatch):
     near1 = "the quick brown fox jumps over the lazy dog again and again today"
     near2 = "the quick brown fox jumps over the lazy dog again and again tonight"
     other = "completely different words in this document about spark engines"
-    df = docs_df(spark, [near1, near2, other])
+    copy = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    # 3-copy group: C(3,2) within-group pairs at 1.0; a 2-copy group of a
+    # 2-token text has no shingles, hence no pair; NULL texts pair with
+    # nothing (their text class has no shingles either).
+    df = docs_df(
+        spark, [near1, near2, other, copy, copy, copy, "hi there", "hi there", None, None]
+    )
     monkeypatch.setattr(neardup, "load_table", lambda s, d, n: df)
     out = neardup.dedup_text_ngram_jaccard(spark, "ignored").collect()
-    assert [(r.doc_id_1, r.doc_id_2) for r in out] == [(0, 1)]
-    assert out[0].jaccard >= 0.8
+    pairs = {(r.doc_id_1, r.doc_id_2): r.jaccard for r in out}
+    assert len(out) == len(pairs)
+    assert set(pairs) == {(0, 1), (3, 4), (3, 5), (4, 5)}
+    assert pairs[(0, 1)] >= 0.8
+    assert pairs[(3, 4)] == pairs[(3, 5)] == pairs[(4, 5)] == 1.0
 
 
 def test_minhash_drops_exact_duplicate(spark, monkeypatch):
@@ -83,10 +92,14 @@ def test_simhash_identical_docs_zero_hamming(spark, monkeypatch):
     from minefields_kafka_streams_deduplication_spark.functions import neardup
 
     text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    df = docs_df(spark, [text, text])
+    # 3 copies give C(3,2) pairs at hamming 0; the 2-token copies have
+    # no fingerprint, hence no pair.
+    df = docs_df(spark, [text, text, text, "hi there", "hi there"])
     monkeypatch.setattr(neardup, "load_table", lambda s, d, n: df)
     out = neardup.dedup_text_simhash(spark, "ignored").collect()
-    assert len(out) == 1 and out[0].hamming == 0
+    assert sorted((r.doc_id_1, r.doc_id_2, r.hamming) for r in out) == [
+        (0, 1, 0), (0, 2, 0), (1, 2, 0)
+    ]
 
 
 def test_sample_mix_deterministic_across_runs(spark, sf_dir):
@@ -217,7 +230,7 @@ def test_minhash_witness_matches_exact_pairs(spark, monkeypatch):
     """The driver-visible LSH witness must return exactly the true
     Jaccard>=0.7 pair set: the near pair, all within-group exact-copy
     pairs (expanded past the representative collapse), nothing for the
-    shingle-less short doc, and no low-similarity pairs."""
+    shingle-less short doc or its copy, and no low-similarity pairs."""
     from minefields_kafka_streams_deduplication_spark.functions import neardup
 
     near1 = "the quick brown fox jumps over the lazy dog again and again today"
@@ -225,11 +238,15 @@ def test_minhash_witness_matches_exact_pairs(spark, monkeypatch):
     copy = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     df = docs_df(
         spark,
-        [near1, near2, copy, copy, copy, "unrelated totally different words", "hi there"],
+        [
+            near1, near2, copy, copy, copy,
+            "unrelated totally different words", "hi there", "hi there",
+        ],
     )
     monkeypatch.setattr(neardup, "load_table", lambda s, d, n: df)
     out = neardup.neardup_minhash_verified(spark, "ignored").collect()
     pairs = {(r.doc_id_1, r.doc_id_2): r.jaccard for r in out}
+    assert len(out) == len(pairs)
     assert set(pairs) == {(0, 1), (2, 3), (2, 4), (3, 4)}
     assert pairs[(2, 3)] == pairs[(2, 4)] == pairs[(3, 4)] == 1.0
     assert pairs[(0, 1)] >= 0.7

@@ -1,10 +1,14 @@
-"""Self-check harness: replicate the driver's correctness gate locally.
+"""Oracle gate: replicate the driver's correctness check locally, with
+EXACT value equality (zero float tolerance — stronger than the driver's
+hash: any hashing scheme passes if this does).
 
-Runs every queries() entry at the given SF and compares against its
-oracle_sql() via DuckDB: row count, column names, and order-insensitive
-value comparison. Queries without an oracle get a rows-only check.
+Runs every queries() entry at the given SF. A query with an oracle_sql()
+entry is compared against DuckDB on row count, column names and the
+order-insensitive row multiset; a query without one gets a rows-only run.
 
 Usage: python tools/check.py [sf_dir] [query ...]
+(extra args restrict the check to those queries; seconds instead of
+minutes for a subset)
 """
 
 from __future__ import annotations
@@ -21,8 +25,6 @@ import duckdb
 
 import minefields_kafka_streams_deduplication_spark as engine
 
-TABLES = engine.TABLES
-
 
 def norm_value(v):
     if v is None:
@@ -30,8 +32,7 @@ def norm_value(v):
     if isinstance(v, float):
         if math.isnan(v):
             return "NaN"
-        # kill -0.0 vs 0.0 and representation jitter beyond ~12 sig digits
-        return float(f"{v:.12g}")
+        return v + 0.0  # exact; just collapses -0.0
     if hasattr(v, "isoformat"):  # datetime/date
         return v.isoformat()
     if isinstance(v, bytes):
@@ -48,66 +49,68 @@ def norm_rows(cols, rows):
     return out
 
 
-def main():
+def compare(scols, srows, dcols, drows) -> str | None:
+    """The first problem between Spark's and DuckDB's answer, or None."""
+    if len(srows) != len(drows):
+        return f"rowcount spark={len(srows)} duckdb={len(drows)}"
+    if sorted(scols) != sorted(dcols):
+        return f"columns spark={sorted(scols)} duckdb={sorted(dcols)}"
+    ns, nd = norm_rows(scols, srows), norm_rows(dcols, drows)
+    if ns != nd:
+        diffs = [(a, b) for a, b in zip(ns, nd) if a != b][:2]
+        return f"values differ; first diffs (spark, duckdb): {diffs}"
+    return None
+
+
+def main() -> None:
     args = sys.argv[1:]
     sf_dir = args[0] if args and os.path.isdir(args[0]) else "/root/testdata/sf0.01"
     only = set(args[1:]) if args and os.path.isdir(args[0]) else set(args)
+    queries = engine.get_queries()
+    oracles = engine.get_oracles()
+    unknown = sorted(only - set(queries))
+    if unknown:
+        sys.exit(f"unknown queries: {unknown}")
+    names = sorted(only or queries)
 
-    spark = engine.get_spark("self-check")
+    spark = engine.get_spark("oracle-check")
     con = duckdb.connect()
-    for t in TABLES:
+    for t in engine.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
-
-    queries = engine.get_queries()
-    oracles = engine.get_oracles()
-    results = {}
-    for name, fn in sorted(queries.items()):
-        if only and name not in only:
-            continue
+    n_exact = n_rows_only = n_fail = 0
+    for name in names:
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
+            sdf = queries[name](spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
+            if name in oracles:
+                cur = con.execute(oracles[name])
+                problem = compare(
+                    scols, srows, [d[0] for d in cur.description], cur.fetchall()
+                )
         except Exception:
-            results[name] = ("SPARK-ERROR", traceback.format_exc(limit=8))
-            print(f"FAIL  {name}: SPARK-ERROR\n{results[name][1]}")
+            n_fail += 1
+            print(f"ERR   {name}:\n{traceback.format_exc(limit=8)}")
             continue
+        finally:
+            spark.catalog.clearCache()
+        took = f"[{time.time() - t0:.1f}s]"
         if name not in oracles:
-            results[name] = ("ROWS-ONLY", f"{len(srows)} rows")
-            print(f"ok    {name}: rows-only, {len(srows)} rows  [{time.time()-t0:.1f}s]")
-            continue
-        try:
-            cur = con.execute(oracles[name])
-            dcols = [d[0] for d in cur.description]
-            drows = cur.fetchall()
-        except Exception:
-            results[name] = ("ORACLE-ERROR", traceback.format_exc(limit=4))
-            print(f"FAIL  {name}: ORACLE-ERROR\n{results[name][1]}")
-            continue
-        problems = []
-        if len(srows) != len(drows):
-            problems.append(f"rowcount spark={len(srows)} duckdb={len(drows)}")
-        if sorted(scols) != sorted(dcols):
-            problems.append(f"columns spark={sorted(scols)} duckdb={sorted(dcols)}")
-        if not problems:
-            ns, nd = norm_rows(scols, srows), norm_rows(dcols, drows)
-            if ns != nd:
-                diff = [(a, b) for a, b in zip(ns, nd) if a != b][:3]
-                problems.append(f"values differ; first diffs (spark,duckdb): {diff}")
-        if problems:
-            results[name] = ("MISMATCH", "; ".join(problems))
-            print(f"FAIL  {name}: {results[name][1][:500]}")
+            n_rows_only += 1
+            print(f"ok    {name}: rows-only, {len(srows)} rows  {took}")
+        elif problem:
+            n_fail += 1
+            print(f"DIFF  {name}: {problem[:500]}")
         else:
-            results[name] = ("PASS", f"{len(srows)} rows")
-            print(f"PASS  {name}: {len(srows)} rows  [{time.time()-t0:.1f}s]")
-
-    n_pass = sum(1 for s, _ in results.values() if s == "PASS")
-    n_ro = sum(1 for s, _ in results.values() if s == "ROWS-ONLY")
-    n_fail = len(results) - n_pass - n_ro
-    print(f"\n== {n_pass} PASS, {n_ro} rows-only, {n_fail} FAIL, of {len(results)} ==")
+            n_exact += 1
+            print(f"EXACT {name}: {len(srows)} rows  {took}")
+    print(
+        f"\n== {n_exact} EXACT, {n_rows_only} rows-only, {n_fail} DIFF/ERR"
+        f" of {len(names)} =="
+    )
     spark.stop()
     sys.exit(1 if n_fail else 0)
 
